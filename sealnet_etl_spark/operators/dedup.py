@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import bytes_conf
 from ..sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -207,9 +208,7 @@ def shingle_postings(
             yield _pd.DataFrame({"doc_id": ids, "sh": shs})
 
     par = spark.sparkContext.defaultParallelism
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    )
+    max_split = bytes_conf(spark, "spark.sql.files.maxPartitionBytes")
     src = docs.select("doc_id", "text")
     # fan_out=False: the caller has already sized its input (the
     # streaming monitors' per-batch n_batch rule) — a second exchange
@@ -2475,9 +2474,7 @@ def llm_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     src = docs.select("doc_id", "text")
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    )
+    max_split = bytes_conf(spark, "spark.sql.files.maxPartitionBytes")
     if _documents_bytes(sf_dir) // max_split < par:
         src = src.repartition(par)
     sh = _truncate_lineage(
@@ -2673,9 +2670,7 @@ def llm_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     src = docs.select("doc_id", "text")
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    )
+    max_split = bytes_conf(spark, "spark.sql.files.maxPartitionBytes")
     if _documents_bytes(sf_dir) // max_split < par:
         src = src.repartition(par)
     sh = src.mapInPandas(rows, "doc_id long, pos long, sh string").select(

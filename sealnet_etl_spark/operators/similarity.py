@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import bytes_conf
 from ..sources import load_table
 from .dedup import _truncate_lineage, connected_components
 
@@ -2912,7 +2913,6 @@ def _ivf_assign_cells(
     nn_ints = [int(r["nn"]) for r in seed_rows]
     nn_f = np.array([float(v) for v in nn_ints], dtype=np.float64)
     cell_arr = np.array(cell_ids, dtype=np.int64)
-    n_cells, dim = b_mat.shape
 
     in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = ", ".join(
@@ -2920,6 +2920,11 @@ def _ivf_assign_cells(
         + ["cell_id bigint"]
         + ([f"a {in_fields['a']}", "cc bigint"] if keep_vec else [])
     )
+    if not seed_rows:
+        # No cells (empty embeddings table): the Catalyst form's cross
+        # join against zero seeds yields no rows, and so does this.
+        return df.sparkSession.createDataFrame([], out_schema)
+    n_cells, dim = b_mat.shape
 
     def _exact_best(row_dots) -> int:
         best_s = None
@@ -3034,9 +3039,7 @@ def _ivf_members_fan_out(
     — at 100 TB the scan itself provides the parallelism and the branch
     is a no-op by construction."""
     par = spark.sparkContext.defaultParallelism
-    max_split = int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    )
+    max_split = bytes_conf(spark, "spark.sql.files.maxPartitionBytes")
     if _embeddings_bytes(sf_dir) // max_split < par:
         return members.repartition(par)
     return members

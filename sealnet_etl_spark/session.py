@@ -86,6 +86,14 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def bytes_conf(spark: SparkSession, key: str) -> int:
+    """A byte-size conf in bytes, parsed the way Spark parses it: ``"128m"``,
+    ``"128MB"`` and ``"134217728"`` all read as 134217728."""
+    return spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(key)
+    )
+
+
 def get_spark(
     app_name: str = "sealnet-etl-spark",
     cpus: int | None = None,

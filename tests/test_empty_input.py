@@ -43,6 +43,37 @@ def test_every_query_survives_empty_tables(spark, empty_sf_dir):
     assert not failures, failures
 
 
+def test_ivf_family_survives_empty_embeddings(spark, empty_sf_dir):
+    """With no embeddings there are no seed cells. The assignment kernel
+    must then return what its Catalyst reference returns (no rows), and
+    every IVF-family query must build and run instead of failing to
+    unpack an empty seed matrix."""
+    from sealnet_etl_spark.operators.similarity import (
+        _ivf_assign_cells,
+        _ivf_assign_cells_catalyst,
+        _ivf_frozen_seeds,
+        _ivf_int_vectors,
+    )
+
+    ei = _ivf_int_vectors(spark, empty_sf_dir)
+    seeds = _ivf_frozen_seeds(spark, ei)
+    assert seeds.count() == 0
+    for keep_vec in (False, True):
+        kernel = _ivf_assign_cells(ei, seeds, keep_vec=keep_vec)
+        reference = _ivf_assign_cells_catalyst(ei, seeds, keep_vec=keep_vec)
+        assert kernel.collect() == reference.collect() == []
+        assert kernel.columns[:3] == reference.columns[:3]
+    failures = {}
+    for name, fn in all_queries().items():
+        if "ivf" not in name:
+            continue
+        try:
+            fn(spark, empty_sf_dir).collect()
+        except Exception as exc:  # noqa: BLE001 - collecting the family
+            failures[name] = f"{type(exc).__name__}: {exc}"[:160]
+    assert not failures, failures
+
+
 @pytest.fixture(scope="module")
 def nulled_sf_dir(spark, tmp_path_factory):
     """~10% deterministic nulls injected into the nullable payload columns

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from sealnet_etl_spark.registry import all_queries
 
-SF = "/root/testdata/sf0.01"
+from .conftest import SF_DIR as SF
 
 
 @pytest.fixture(scope="module")

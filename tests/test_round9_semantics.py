@@ -8,7 +8,7 @@ import pytest
 
 from sealnet_etl_spark.registry import all_queries
 
-SF = "/root/testdata/sf0.01"
+from .conftest import SF_DIR as SF
 
 
 @pytest.fixture(scope="module")

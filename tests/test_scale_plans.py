@@ -14,7 +14,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SMOKE_SF_DIR
 
 
 def _formatted_plan(df) -> str:
@@ -654,3 +654,22 @@ def test_winnowing_exchanges_are_doc_keyed_only(spark):
         if "Exchange hashpartitioning" in line:
             assert "doc_id" in line, line
     assert "CartesianProduct" not in plan
+
+
+def test_size_gates_accept_unit_suffixed_split_size(spark):
+    """`spark.sql.files.maxPartitionBytes` may legally be "128m"; the
+    fan-out gates read it with Spark's own byte-string parser instead of
+    int(), which raised ValueError while the plan was being built."""
+    from sealnet_etl_spark.registry import all_queries
+    from sealnet_etl_spark.session import bytes_conf
+
+    key = "spark.sql.files.maxPartitionBytes"
+    queries = all_queries()
+    spark.conf.set(key, "128m")
+    try:
+        assert bytes_conf(spark, key) == 128 << 20
+        for name in ("llm_ivf_cell_probe_nprobe", "llm_substring_dedup_spans"):
+            queries[name](spark, SMOKE_SF_DIR)
+    finally:
+        spark.conf.unset(key)
+    assert bytes_conf(spark, key) == 128 << 20
